@@ -42,6 +42,10 @@ final class Flow(
     inheritedWrites: List[(String, String)] = Nil,
     rootFlow: Boolean = true) {
 
+  // the flow boundary: transforms, macros and foreachBatch sessions
+  // cloned from this one all resolve the native functions
+  graft.functions.GraftFunctions.ensure(spark)
+
   private var lastNameVar: Option[String] = None
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[Flow])
 

@@ -43,7 +43,7 @@ case class MinHash8(child: Expression) extends UnaryExpression {
   // inputs, and defineCodeGen never sets ev.isNull from the result — under
   // whole-stage codegen (any file-backed plan) the downstream
   // ArrayData.numElements() would NPE. Same explicit-null pattern as
-  // [[SimHash16]]; pinned by MinHash8Spec's codegen-path tests.
+  // [[SimHash]]; pinned by MinHash8Spec's codegen-path tests.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val v = ctx.freshName("mhSigs")
     nullSafeCodeGen(ctx, ev, c =>

@@ -279,9 +279,12 @@ object DataSelection {
     * vocabulary eagerly; callers that do pay its one plan then).
     * Lineage still resets per round (Components' recipe), and NO round
     * after the first rescans the corpus (plan-pinned in
-    * QualitySketchSpec). The per-round winner is a 1-ROW collect. */
+    * QualitySketchSpec). The per-round winner is a 1-ROW collect.
+    * Each round frees the checkpoint before it; the third result frees
+    * the last one, which the final vocabulary reads — call it once that
+    * vocabulary is done with. */
   private[graft] def bpeRounds(spark: SparkSession, dir: String,
-      k: Int): (DataFrame, Seq[(Int, String, String, Long)]) = {
+      k: Int): (DataFrame, Seq[(Int, String, String, Long)], () => Unit) = {
     val vocab0 = withWords(t(spark, dir, "documents"))
       .select(explode(col("words")).as("word"))
       .filter(length(col("word")) >= 2)
@@ -289,6 +292,7 @@ object DataSelection {
       .withColumn("syms", expr(
         "transform(sequence(1, length(word)), i -> substr(word, i, 1))"))
     var ex = bpeExplode(vocab0).localCheckpoint()
+    var ckpt = ex
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
     var done = false
@@ -302,19 +306,29 @@ object DataSelection {
         val (a, b, n) = (top(0).getString(0), top(0).getString(1),
           top(0).getLong(2))
         merges += ((r, a, b, n))
-        val old = ex
         val merged = bpeExplode(bpeApplyMerge(ex, a, b))
         if (r < k) {
           ex = merged.localCheckpoint()
-          old.unpersist()
+          releaseCheckpoint(ckpt)
+          ckpt = ex
         } else ex = merged // last round: no action reads it eagerly
         r += 1
       }
     }
     (ex.groupBy("word").agg(max("wcnt").as("wcnt"),
       expr("transform(array_sort(collect_list(struct(pos, sym)))," +
-        " x -> x.sym)").as("syms")), merges.result())
+        " x -> x.sym)").as("syms")), merges.result(), () => releaseCheckpoint(ckpt))
   }
+
+  /** Free a localCheckpoint's blocks. Dataset.unpersist only reaches the
+    * CacheManager; the checkpoint's blocks belong to the persisted RDD
+    * under its LogicalRDD. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** DuckDB twin of [[bpeRounds]]: k chained CTE blocks, each the exact
     * window spelling of one count + merge round ([[bpeApplyMerge]]'s
@@ -2750,8 +2764,8 @@ object DataSelection {
     "t87_bpe_trainer" -> QueryDef(
       (spark, dir) => {
         import spark.implicits._
-        val (vocab, merges) = bpeRounds(spark, dir, 8)
-        vocab.unpersist()
+        val (_, merges, release) = bpeRounds(spark, dir, 8)
+        release()
         merges.toDF("round", "a", "b", "n_occ")
           .select(col("round"), col("a"), col("b"),
             concat(col("a"), col("b")).as("merged"), col("n_occ"))

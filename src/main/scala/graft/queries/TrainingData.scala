@@ -253,7 +253,7 @@ object TrainingData {
   /** 16-bit SimHash per document (t04's computation, shared with t18):
     * per-token md5 bit votes, +1/-1 summed, sign → bit. */
   private[graft] def simhash16(spark: SparkSession, dir: String): DataFrame =
-    // one compiled pass per doc (native [[graft.functions.SimHash16]]);
+    // one compiled pass per doc (native [[graft.functions.SimHash]]);
     // replaces explode → groupBy(doc_id) → 16 conditional sums. The
     // oracle keeps the exploded digit-probe spelling (simhash16Duck) —
     // bit parity proven by Simhash16Spec and the driver hash gate.
@@ -281,7 +281,7 @@ object TrainingData {
   }
 
   /** 64-bit SimHash per document — the width-parameterized sibling of
-    * [[simhash16]] (native [[graft.functions.SimHash64]]; same
+    * [[simhash16]] (native [[graft.functions.SimHash]] at width 64; same
     * digit-probe numbering over md5's 16 leading hex digits, so
     * `simhash64 & 0xFFFF == simhash16` per doc — Simhash64Spec's
     * containment pin ties t101's answers back to t18's). */
@@ -316,7 +316,7 @@ object TrainingData {
   }
 
   /** 128-bit SimHash per document as two BIGINT words — the full-md5
-    * width of the family (native [[graft.functions.SimHash128]]; same
+    * width of the family (native [[graft.functions.SimHash]] at width 128; same
     * digit-probe numbering over all 32 md5 hex digits, so
     * `simhash128[0] == simhash64` per doc — Simhash128Spec's containment
     * pin ties t105's answers back through t101's to t18's). */

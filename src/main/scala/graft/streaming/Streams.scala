@@ -14,6 +14,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * over growing inputs with incremental processing — per-key state lives
   * in the executor state store, partitioned by `groupByKey`, so it scales
   * horizontally with the cluster.
+  *
+  * Helpers that call native functions (word_ngrams, minhash8,
+  * bloom_filter_agg) expect a session that already has the
+  * [[graft.functions.GraftFunctions]] catalog; foreachBatch's cloned
+  * session inherits the host session's functions.
   */
 object Streams {
 
@@ -316,7 +321,6 @@ object Streams {
   def streamingDecontaminate(docs: DataFrame, contentCol: String,
       evalDocs: DataFrame, evalContentCol: String): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val evalHashes = evalDocs
       .select(explode(expr(
         s"word_ngrams(split($evalContentCol, ' '), 13)")).as("g"))
@@ -343,8 +347,6 @@ object Streams {
     * Bloom sketch ever reach the driver — never the grams. */
   def evalGramIndex(evalDocs: DataFrame, evalContentCol: String,
       expectedItems: Long = 1000000L): (DataFrame, Array[Byte]) = {
-    val spark = evalDocs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val grams = evalDocs
       .select(explode(expr(
         s"word_ngrams(split($evalContentCol, ' '), 13)")).as("g"))
@@ -373,7 +375,6 @@ object Streams {
   def decontaminateBatchBloom(batch: DataFrame, idCol: String,
       contentCol: String, evalGrams: DataFrame,
       bloom: Array[Byte]): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val hits = batch
       .select(col(idCol), explode(expr(
         s"transform(word_ngrams(split($contentCol, ' '), 13), " +
@@ -439,7 +440,6 @@ object Streams {
   def dedupBatchAgainstIndex(batch: DataFrame, statePath: String,
       batchId: Long, bands: Option[DataFrame] = None): DataFrame = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     def upTo(ix: Option[DataFrame]): Option[DataFrame] =
       ix.map(_.filter(col("batch") < batchId))
     (upTo(readIndex(spark, s"$statePath/hashes")),
@@ -498,10 +498,6 @@ object Streams {
     * parquet spelling). */
   def extendIndex(batch: DataFrame, statePath: String, batchId: Long,
       bands: Option[DataFrame] = None): Unit = {
-    // minhashBands parses graft-function SQL (minhash8); register here
-    // too — this is a public API and must not depend on the probe
-    // having run first on this session
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     // the two partitions are independent dirs and both idempotent
     // batch=N overwrites, so the writes OVERLAP (r16): the scheduler
     // interleaves the two small jobs instead of paying two full job

@@ -19,7 +19,7 @@ object AssignCellsLab {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     import graft.queries.Curation.{assignCells, lcgCentroid}
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").localCheckpoint()
     println(s"rows = ${emb.count()}")

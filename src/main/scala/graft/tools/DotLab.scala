@@ -10,7 +10,7 @@ object DotLab {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .localCheckpoint()
     def noop(df: org.apache.spark.sql.DataFrame): Unit =

@@ -17,6 +17,7 @@ object P23Probe {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensure(spark)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"$label%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r

@@ -42,7 +42,7 @@ object T02Probe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
 
     def stages(dir: String): Unit = {
       def t[A](label: String)(f: => A): A = {

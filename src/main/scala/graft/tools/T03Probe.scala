@@ -17,7 +17,7 @@ object T03Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 

@@ -16,7 +16,7 @@ object T08Lab {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text", "n_chars")
     def t(label: String, c: org.apache.spark.sql.Column): Unit = {

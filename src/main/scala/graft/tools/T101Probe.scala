@@ -30,7 +30,7 @@ object T101Probe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
 
     val src = "/root/testdata/sf0.1"
     val docs = spark.read.parquet(s"$src/documents.parquet")

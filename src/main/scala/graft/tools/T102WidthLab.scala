@@ -49,6 +49,7 @@ object T102WidthLab {
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensure(spark)
     import graft.queries.Tables.t
     val n = t(spark, dir, "embeddings").count()
     println(s"fixture: $n vectors at $dir")

@@ -18,7 +18,7 @@ object T12BandsLab {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").localCheckpoint()
     println(s"rows = ${emb.count()}")
     def planeCol(j: Int): Column = typedlit((1 to 64).map { d =>

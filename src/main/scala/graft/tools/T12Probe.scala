@@ -26,7 +26,7 @@ object T12Probe {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     // t12's plane/dot recipes, replicated verbatim (they are
     // private[queries]; the LCG is pinned by the oracle either way)
     def dotSql(a: String, b: String): String = s"float_dot($a, $b)"

@@ -20,6 +20,7 @@ object T18Lab {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensure(spark)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 

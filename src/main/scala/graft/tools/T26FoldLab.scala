@@ -26,7 +26,7 @@ object T26FoldLab {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     import graft.queries.Curation.{semdedupVerdictsFold, semdedupVerdictsJoin}
 
     def gcMillis(): Long = {

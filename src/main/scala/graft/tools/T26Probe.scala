@@ -25,7 +25,7 @@ object T26Probe {
     for (i <- 1 to 3) {
       println(s"--- run $i")
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      graft.functions.GraftFunctions.register(spark)
+      graft.functions.GraftFunctions.ensure(spark)
       val n = t("count")(emb.count())
       val kCells = semdedupK(n)
       val init = (1 to kCells).map(c => c -> lcgCentroid(c + 100))

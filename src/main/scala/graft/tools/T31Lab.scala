@@ -36,6 +36,7 @@ object T31Lab {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensure(spark)
 
     def time(mk: () => DataFrame): Double =
       (1 to 3).map { _ =>

@@ -16,7 +16,7 @@ object T75Lab {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     def t[A](label: String)(f: => A): A = {
       // return the LAST timed run's result (r17 ADVICE: a trailing
       // bare `f` re-evaluated the thunk a third, untimed time)

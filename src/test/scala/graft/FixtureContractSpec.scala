@@ -47,7 +47,8 @@ class FixtureContractSpec extends AnyFunSuite {
     // different rows and max_by's pick would be nondeterministic (r21
     // advice). The fixture guarantees it; pin that guarantee so a future
     // fixture regeneration can't silently desync the two aggregates.
-    for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+    for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
+        "/root/testdata/sf0.1")) {
       val dups = graft.queries.Tables.events(spark, d)
         .groupBy("user_id", "event_type", "event_id").count()
         .filter(col("count") > 1).limit(1).count()

@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   *     short/long vectors, and integer element types.
   */
 class HyperplaneBandsSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark
-    graft.functions.GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   /** The md5 plane family via the ORACLE's derivation: first 8 md5 hex
     * digits parsed as an integer (not the kernel's byte arithmetic). */

@@ -136,7 +136,7 @@ class QualitySketchSpec extends AnyFunSuite {
     // the trainer's scale claim: ONE corpus scan builds the vocabulary,
     // then every round's plan starts from the checkpointed vocab —
     // per-round exchanges stay on the word vocabulary by construction
-    val (vocab, merges) = graft.queries.DataSelection.bpeRounds(spark, sf, 2)
+    val (vocab, merges, release) = graft.queries.DataSelection.bpeRounds(spark, sf, 2)
     try {
       assert(merges.size == 2)
       assert(merges.map(_._1) == Seq(1, 2))
@@ -144,7 +144,17 @@ class QualitySketchSpec extends AnyFunSuite {
       val plan = vocab.queryExecution.optimizedPlan.toString
       assert(!plan.toLowerCase.contains("parquet"),
         s"round-2 vocab must build on the checkpointed round-1 vocab:\n$plan")
-    } finally { vocab.unpersist(); () }
+    } finally release()
+  }
+
+  test("t87: building the trainer leaves no round checkpoint persisted") {
+    // ids, not sizes: the registry holds RDDs weakly, so an earlier
+    // suite's unreferenced RDD may drop out while t87 builds
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    SparkEntry.queries("t87_bpe_trainer")(spark, sf).collect()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"t87 left RDDs $left persisted")
   }
 
   test("t76: every winnow pair is ordered, bounded, and self-consistent") {

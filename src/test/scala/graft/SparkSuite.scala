@@ -14,6 +14,7 @@ object SparkSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensure(s)
     s
   }
 }
